@@ -2127,7 +2127,7 @@ object SparkEntry {
     import s.implicits._
     // validated rebase under the oracle gate: a compaction planned against
     // snapshot S commits AFTER an interleaved append WITHOUT re-planning —
-    // GraftTable.commitRewrite, the Iceberg-RewriteFiles stance. Four doc_id
+    // a Commit.Rewrite, the Iceberg-RewriteFiles stance. Four doc_id
     // slices are appended, a full re-pack of their files is planned against
     // that head, a fifth slice lands mid-rewrite, and the rebased compaction
     // commits on top of it. The final table must reassemble `documents`
@@ -2152,8 +2152,8 @@ object SparkEntry {
     val added = table.writeDataFiles(packed, "compact")
     // the interleaved ingest: lands between the rewrite's plan and commit
     table.append(shaped(docs.filter($"doc_id" % 5 === 4)).repartition(2))
-    val snap = table.commitRewrite(basis, added, paths.toSet, "compact",
-      removedRecords = basis.get.recordCount)
+    val snap = table.commit(graft.lake.Commit("compact", graft.lake.Commit.Rewrite(basis),
+      added = added, removed = paths.toSet, removedRecords = basis.get.recordCount))
     val chain = table.ancestorsOf(table.currentVersion)
     val meta = Seq((
       table.listSnapshots().count(s0 => s0.operation == "append" && chain(s0.version)).toLong,

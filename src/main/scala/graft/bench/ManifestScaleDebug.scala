@@ -47,8 +47,10 @@ object ManifestScaleDebug {
         lit(0L).as("min_rh"), lit(0L).as("max_rh"),
         lit(0L).as("digest"))
       .write.mode("overwrite").parquet(t.io.abs(addRel).toString)
-    val snap = t.commitSparkShards(Seq(addRel), "synthetic-import",
-      entries.toLong * 1000L, entries.toLong)
+    val snap = t.commit(graft.lake.Commit("synthetic-import",
+      graft.lake.Commit.Exact(t.currentSnapshot), shards = Seq("add" -> addRel),
+      base = graft.lake.Commit.Explicit(Seq.empty),
+      counts = Some((entries.toLong * 1000L, entries.toLong))))
     require(snap.fileCount == entries.toLong)
 
     val rt = Runtime.getRuntime

@@ -164,8 +164,8 @@ object Delete {
       }
     val removedRecords = cand.map(_._2).sum
     val deleted = removedRecords - added.map(_.record_count).sum
-    table.commit(added, cand.map(_._1).toSet, "delete", removedRecords,
-      basis = Some(snap))
+    table.commit(Commit("delete", Commit.Exact(Some(snap)), added = added,
+      removed = cand.map(_._1).toSet, removedRecords = removedRecords))
     DeleteResult(fullFiles.length, partial.length, deleted)
   }
 }

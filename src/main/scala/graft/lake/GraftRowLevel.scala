@@ -213,8 +213,10 @@ class GraftReplaceDataWrite(location: String, op: GraftRowLevelOperation,
         fused.map(_.copy(partition = opName))
       else table.statsForFiles(files, opName)
     val removed = op.scannedFiles
-    table.commit(added, removed.map(_._1).toSet, opName,
-      removedRecords = removed.map(_._2).sum, basis = op.basis)
+    // no basis = nothing was scanned (empty table): a pure insert
+    val rule = op.basis.fold[Commit.Rule](Commit.Append)(b => Commit.Exact(Some(b)))
+    table.commit(Commit(opName, rule, added = added,
+      removed = removed.map(_._1).toSet, removedRecords = removed.map(_._2).sum))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -380,7 +382,7 @@ object GraftCowDataWriter {
 // WriteDelta instead of ReplaceData — the scan serves each row's physical
 // address through the (_file, _pos) row id, the writer turns deletes into
 // position-delete address shards and inserts into ordinary data files, and
-// the commit lands BOTH in one snapshot (GraftTable.commitMorRowChange).
+// the commit lands BOTH in one snapshot (one GraftTable.commit).
 // No target file is rewritten; write bytes ∝ matched + inserted rows. This
 // is the same split Iceberg makes between its copy-on-write and
 // position-delta SQL paths, on the same Spark connector interfaces.
@@ -445,14 +447,15 @@ class GraftDeltaWrite(location: String, op: GraftDeltaOperation,
       else table.statsForFiles(dataFiles, "sql-mor")
     op.basis match {
       case Some(basis) =>
-        table.commitMorRowChange(basis, added, posFiles, deleted,
-          s"sql-mor-${op.command().toString.toLowerCase}")
+        table.commit(Commit(s"sql-mor-${op.command().toString.toLowerCase}",
+          Commit.Exact(Some(basis)), added = added,
+          shards = posFiles.map("posdel" -> _), recordDelta = -deleted))
       case None =>
         // no snapshot existed when the scan planned (MERGE INTO an empty
         // table): there was nothing to address, so this is a pure insert
         require(deleted == 0L && posFiles.isEmpty,
           "delta deletes without a planned scan basis")
-        table.commit(added, Set.empty, "append")
+        table.commit(Commit("append", Commit.Append, added = added))
     }
     ()
   }

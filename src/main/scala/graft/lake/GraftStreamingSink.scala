@@ -69,7 +69,7 @@ class GraftStreamingWrite(location: String, queryId: String, inputSchema: Struct
       val entries =
         if (fused.map(_.file_path).sorted == files.sorted) fused
         else table.statsForFiles(files, tag = "stream")
-      val snap = table.commit(entries, Set.empty, op)
+      val snap = table.commit(Commit(op, Commit.Append, added = entries))
       table.io.writeAtomic(markerRel, s"$epochId ${snap.version}")
     }
   }

@@ -42,14 +42,15 @@ import java.util.UUID
   * WRITERS use optimistic concurrency (Iceberg-style), not a lock service:
   * each commit must win an atomic exclusive-create EDGE CLAIM
   * (`meta/edge-<ref>-v<parent>`) to extend its ref from its parent, so
-  * concurrent commits are serialized per ref with lost races DETECTED —
-  * adds-only commits (append, streaming epochs, WAP publish) rebase onto the
-  * winner and retry; rewrite commits VALIDATE-AND-REBASE over compatible
-  * interleaves (commitRewrite — the Iceberg RewriteFiles stance) and throw
-  * [[CommitConflictException]] only on genuine overlap; content-dependent
-  * commits (MERGE, MoR deletes) always conflict on a moved head. Version ids
-  * stay globally unique across refs via per-version claims. See the
-  * "optimistic concurrency" section below.
+  * concurrent commits are serialized per ref with lost races DETECTED.
+  * Every snapshot is published by one routine, [[GraftTable.commit]], under
+  * one of three [[Commit.Rule]]s: adds-only commits (append, streaming
+  * epochs, WAP publish) rebase onto the winner and retry; rewrite commits
+  * VALIDATE-AND-REBASE over compatible interleaves (the Iceberg RewriteFiles
+  * stance) and throw [[CommitConflictException]] only on genuine overlap;
+  * content-dependent commits (MERGE, MoR deletes) always conflict on a
+  * moved head. Version ids stay globally unique across refs via per-version
+  * claims. See the "optimistic concurrency" section below.
   */
 /** fileCount = live data files at this snapshot, maintained arithmetically
   * like recordCount (-1 when unknown, e.g. tables written before the field
@@ -108,6 +109,60 @@ final case class ManifestEntry(file_path: String, partition: String,
 
 final case class ManifestShard(seq: Int, kind: String, path: String) // add | remove
 
+/** One pending table change — the shape of Iceberg's PendingUpdate — that
+  * [[GraftTable.commit]] publishes as one snapshot.
+  *
+  * The new shard list is `base` followed, in this order, by the pre-written
+  * eqdel shards, one add shard holding `added`, the other pre-written
+  * shards and one remove shard holding `removed`. An eqdel shard thus
+  * always sequences before its own commit's adds, so an upsert's rows
+  * survive their own retraction (the Iceberg sequence rule).
+  *
+  * Counts are arithmetic over the parent: + `added` rows/files,
+  * + `recordDelta`/`fileDelta` (what the pre-written shards add or
+  * retract), − `removedRecords`/|removed|. `counts` gives absolute
+  * (records, files) instead, for commits that restructure the list. */
+final case class Commit(
+    operation: String,
+    rule: Commit.Rule,
+    added: Seq[ManifestEntry] = Seq.empty,
+    removed: Set[String] = Set.empty,
+    // live rows in `removed`; -1 = derive from the rule's basis manifest
+    removedRecords: Long = -1L,
+    // pre-written (kind, path) shards: eqdel/posdel delete shards, or add
+    // shards written elsewhere (WAP stage, cherry-pick, distributed writes)
+    shards: Seq[(String, String)] = Seq.empty,
+    recordDelta: Long = 0L,
+    fileDelta: Long = 0L,
+    counts: Option[(Long, Long)] = None,
+    base: Commit.Base = Commit.Parent,
+    // (extraCols, droppedCols) for schema commits; None inherits the parent's
+    schema: Option[(String, String)] = None)
+
+object Commit {
+  /** How a commit treats a head that moved since it was planned — the only
+    * three concurrency policies the table format has. */
+  sealed trait Rule { def basis: Option[Snapshot] }
+  /** adds only: re-assembled on whatever head wins a race and retried —
+    * appends commute. */
+  case object Append extends Rule { def basis: Option[Snapshot] = None }
+  /** a content-neutral rewrite of `removed` planned at `basis`: rebases
+    * over compatible interleaves (see GraftTable's validated-rebase
+    * section), conflicts on genuine overlap. */
+  final case class Rewrite(basis: Option[Snapshot]) extends Rule
+  /** planned against exactly `basis`: a moved head is a
+    * [[CommitConflictException]]. */
+  final case class Exact(basis: Option[Snapshot]) extends Rule
+
+  /** the shard list a commit extends */
+  sealed trait Base
+  case object Parent extends Base
+  /** the parent's list minus its eqdel/posdel shards (apply-deletes) */
+  case object ParentWithoutDeletes extends Base
+  /** a given list (rollback, manifest rewrite, delete-shard compaction) */
+  final case class Explicit(shards: Seq[ManifestShard]) extends Base
+}
+
 object GraftTable {
   /** stat-validated snapshot-json LRU shared across table handles (handles
     * are constructed per operation in the DSv2/streaming paths). */
@@ -119,13 +174,15 @@ object GraftTable {
           size() > 1024
       })
 
-  /** drop every cached snapshot under a table location (DROP TABLE path —
-    * a recreated table must never be served the old table's metadata). */
-  private[lake] def invalidateLocation(location: String): Unit =
-    snapCache.synchronized {
-      val it = snapCache.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(location)) it.remove()
-    }
+  /** drop every cached snapshot, shard list and manifest shard under a
+    * table location (DROP TABLE path — a recreated table must never be
+    * served the old table's metadata, even when a file's length and mtime
+    * match). Keys are the caches' own absolute paths. */
+  private[lake] def invalidateLocation(location: String): Unit = {
+    val prefix = LakeIO.of(location).abs("").toString + "/"
+    MetaIO.purge(snapCache, prefix)
+    MetaIO.invalidate(prefix)
+  }
 
   /** per-row content hash whose xor is the order-independent file digest. */
   def rowHash(): org.apache.spark.sql.Column =
@@ -686,8 +743,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     * publishing. The claim is held across a publish (small metadata writes),
     * so the budget must absorb GC pauses and loaded hosts — sized in seconds,
     * not multiples of the happy-path publish latency. */
-  private val contentionBudgetMs: Long =
-    spark.conf.get("spark.graft.commit.contentionBudgetMs", "60000").toLong
+  private val contentionBudgetMs = 60000L
 
   /** allocate a globally unique snapshot version: claim ids upward from the
     * optimistic next until one wins. Uncontended tables claim on the first
@@ -777,8 +833,10 @@ class GraftTable(val spark: SparkSession, val location: String,
     }
     val merged = (parent.map(_.extraCols).filter(_.nonEmpty).toSeq :+ adding.toDDL)
       .mkString(",")
-    metadataOnlyCommit(parent, "evolve-schema",
-      Some((merged, parent.map(_.droppedCols).getOrElse(""))))
+    // metadata-only: re-lists the parent's shards under its own list file;
+    // conflicts on a moved head (the override derives from parent's schema)
+    commit(Commit("evolve-schema", Commit.Exact(parent),
+      schema = Some((merged, parent.map(_.droppedCols).getOrElse("")))))
   }
 
   /** DROP COLUMN: metadata-only — data files keep the bytes, readers stop
@@ -798,20 +856,9 @@ class GraftTable(val spark: SparkSession, val location: String,
       else org.apache.spark.sql.types.StructType(remaining.toArray).toDDL
     val tombs = (parent.droppedCols.split(",").filter(_.nonEmpty).toSeq :+
       name.toLowerCase).mkString(",")
-    metadataOnlyCommit(Some(parent), s"drop-column-$name",
-      Some((remainingDdl, tombs)))
+    commit(Commit(s"drop-column-$name", Commit.Exact(Some(parent)),
+      schema = Some((remainingDdl, tombs))))
   }
-
-  /** a commit that changes ONLY snapshot metadata: re-lists the parent's
-    * manifest shards (its own list file, the rollback pattern, so later
-    * expiry of either snapshot never strands the other). Conflicts (rather
-    * than rebasing) when the head moves — the override was derived from the
-    * parent's schema state. */
-  private def metadataOnlyCommit(parent: Option[Snapshot], operation: String,
-                                 schemaOverride: Option[(String, String)]): Snapshot =
-    publish(parent, parent.map(manifestShards).getOrElse(Seq.empty), operation,
-      parent.map(_.recordCount).getOrElse(0L),
-      parent.map(_.fileCount).getOrElse(0L), schemaOverride)
 
   /** Align a source frame to the current write schema: evolved columns the
     * frame doesn't carry are spliced in as typed nulls (base columns must be
@@ -1046,509 +1093,120 @@ class GraftTable(val spark: SparkSession, val location: String,
     }
   }
 
-  /** Commit a metadata delta with a driver-known removed set: ALL metadata
-    * is written driver-side (MetaIO), zero Spark jobs. Delta shard files are
-    * uid-named so they can be written BEFORE the commit's version is known —
-    * the optimistic-concurrency claim binds the version only at publish.
+  /** THE commit routine: every snapshot of this table is published here.
+    * All metadata is written driver-side (MetaIO), zero Spark jobs. The
+    * delta shards are uid-named so they can be written BEFORE the commit's
+    * version is known — the optimistic-concurrency claim binds the version
+    * only at publish. One loop resolves the parent the commit's rule allows,
+    * assembles the shard list and counts against it, claims the edge and
+    * publishes:
     *
-    * Concurrency policy: an adds-only delta (append, streaming epoch) is
-    * rebased onto whatever head wins a race and retried — appends commute.
-    * A delta with removals was planned against a specific snapshot's file
-    * set (pass it as `basis`, rewrite ops do); a lost race surfaces as
-    * [[CommitConflictException]] instead of silently re-applying a rewrite
-    * onto files another committer may have already replaced. */
-  def commit(added: Seq[ManifestEntry], removedPaths: Set[String], operation: String,
-             removedRecords: Long = -1L, basis: Option[Snapshot] = None): Snapshot = {
+    *   - [[Commit.Append]]: the parent is whatever head is current; a lost
+    *     race re-assembles on the winner and retries — appends commute.
+    *   - [[Commit.Rewrite]]: the head is validated against the planning
+    *     basis (see the validated-rebase section below) and the commit
+    *     rebases onto it, retrying like Append.
+    *   - [[Commit.Exact]]: the parent is the basis; a lost race throws
+    *     [[CommitConflictException]] — the commit's file-level work was
+    *     planned against a snapshot that is no longer the head, and a rebase
+    *     could silently re-apply it onto files another committer replaced.
+    *
+    * The retrying rules wait a bounded time: if the head never moves (the
+    * winning claimant died pre-publish), this surfaces as a conflict naming
+    * repairRefs() instead of spinning forever. */
+  def commit(c: Commit): Snapshot = {
+    require(c.rule != Commit.Append || c.removed.isEmpty,
+      s"${c.operation}: an Append commit cannot remove files")
     init()
     val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
+    val addRel = if (c.added.isEmpty) None else {
       val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
+      MetaIO.writeEntries(io, r, c.added); Some(r)
     }
-    val rmRel = if (removedPaths.isEmpty) None else {
+    val rmRel = if (c.removed.isEmpty) None else {
       val r = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, r, removedPaths.toSeq.sorted); Some(r)
+      MetaIO.writeRemoves(io, r, c.removed.toSeq.sorted); Some(r)
     }
-
-    def assemble(parent: Option[Snapshot]): (Seq[ManifestShard], Long, Long) = {
-      var (shards, seq) = parentShards(parent)
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      val removed =
-        if (removedPaths.isEmpty) 0L
-        else if (removedRecords >= 0L) removedRecords
-        else removedRecordSum(parent, removedPaths) // fallback: one metadata agg
-      val liveCount = parent.map(_.recordCount).getOrElse(0L) +
-        added.map(_.record_count).sum - removed
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fileCount =
-        if (parentFiles < 0) -1L else parentFiles + added.size - removedPaths.size
-      (shards, liveCount, fileCount)
-    }
-
-    if (removedPaths.isEmpty && basis.isEmpty) commitRetrying(operation)(assemble)
-    else {
-      val parent = basis.orElse(currentSnapshot)
-      val (shards, live, files) = assemble(parent)
-      publish(parent, shards, operation, live, files)
-    }
-  }
-
-  /** Commit with the removed-file set supplied as a DataFrame (full rewrites
-    * pass the previous live manifest's paths without collecting them). The
-    * remove shard is a distributed write; pass `removedRecords` when the
-    * caller knows it (a full rewrite removes parent.recordCount rows). */
-  def commitDelta(added: Seq[ManifestEntry], removedDf: Option[DataFrame],
-                  operation: String, removedRecords: Long = -1L,
-                  removedFiles: Long = -1L, basis: Option[Snapshot] = None): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
-      val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
-    }
-    // the removed set may be table-sized (full rewrites): written distributed
-    // under a uid name BEFORE the claim, never collected
-    val rmRel = removedDf.map { rm =>
-      val r = s"meta/manifest-remove-$uid.parquet"
-      rm.select(col("file_path").cast("string")).coalesce(1).write.mode("overwrite")
-        .parquet(io.abs(r).toString)
-      r
-    }
-
-    def assemble(parent: Option[Snapshot]): Seq[ManifestShard] = {
-      var (shards, seq) = parentShards(parent)
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      shards
-    }
-
-    if (removedDf.isEmpty && basis.isEmpty)
-      commitRetrying(operation) { parent =>
-        (assemble(parent),
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum,
-          parent.map(_.fileCount).getOrElse(0L) match {
-            case pf if pf < 0 => -1L
-            case pf => pf + added.size
-          })
-      }
-    else {
-      val parent = basis.orElse(currentSnapshot)
-      val shards = assemble(parent)
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fileCount =
-        if (parentFiles < 0) -1L
-        else if (removedDf.isEmpty) parentFiles + added.size
-        else if (removedFiles >= 0L) parentFiles + added.size - removedFiles
-        else -1L
-      val liveCount =
-        if (removedDf.isEmpty)
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum
-        else if (removedRecords >= 0L)
-          parent.map(_.recordCount).getOrElse(0L) + added.map(_.record_count).sum - removedRecords
-        else {
-          // fallback: aggregate the assembled live manifest (one metadata job)
-          val r = manifestOf(shards).agg(sum($"record_count"), count(lit(1))).head()
-          val c = if (r.isNullAt(0)) 0L else r.getLong(0)
-          return publish(parent, shards, operation, c, r.getLong(1))
-        }
-      publish(parent, shards, operation, liveCount, fileCount)
-    }
-  }
-
-  // ---- validated rebase for rewrite commits (Iceberg RewriteFiles) -------
-  //
-  // A REWRITE (compaction / clustering) replaces `replacedPaths` with
-  // `added` holding the SAME logical rows — it is content-neutral, so unlike
-  // MERGE/UPDATE (whose matched-vs-insert split depends on target content)
-  // it does not have to conflict with every interleaved commit. At 100 TB a
-  // compaction runs for minutes-to-hours while ingest lands continuously;
-  // "re-plan the whole rewrite on any interleaved append" means maintenance
-  // can never commit on a live table. Instead, a lost edge race walks the
-  // snapshot chain from the planning basis to the new head and REBASES when
-  // every interleaved commit is compatible:
-  //
-  //   - "add" shards (appends, other rewrites' outputs)   → compatible
-  //   - "remove" shards DISJOINT from replacedPaths        → compatible
-  //     (two rewrites of disjoint file sets commute)
-  //   - "remove" shards touching a replaced file           → CONFLICT
-  //     (someone else already replaced rows this plan still carries)
-  //   - a restructured manifest list (rewrite-manifests, apply-deletes,
-  //     rollback, full bucket rewrite)                     → CONFLICT
-  //
-  // Independently of the walk, the PUBLISH-TIME parent must hold no pending
-  // delete shard the rewrite would corrupt — whether it arrived as an
-  // interleave or was already in a freshly-read basis (batched maintenance
-  // re-reads its basis per batch):
-  //
-  //   - any pending "eqdel" shard                          → CONFLICT
-  //     (the rebased add shard's seq would exceed the delete's seq, so the
-  //      rewrite's re-written copies of deleted rows would escape the
-  //      sequence rule and resurrect)
-  //   - a pending "posdel" shard touching a replaced file  → CONFLICT
-  //     (its addresses bind to a file this rewrite drops — those deletes
-  //      would silently vanish); DISJOINT posdel shards stay pending, valid
-  //
-  // Validation happens against the head observed at the top of each attempt;
-  // the edge claim then proves the head did not move between validation and
-  // publish (heads only move by claiming edges), so a rebase can never
-  // silently skip an unvalidated commit.
-
-  /** Commit a rewrite of `replacedPaths` into `added` with validated rebase
-    * (see block comment above). `basis` is the snapshot the plan was made
-    * against; `removedRecords` the exact row count of the replaced files
-    * (still exact after a rebase — compatible interleaves never touch them).
-    * Throws [[CommitConflictException]] on a genuine conflict. */
-  def commitRewrite(basis: Option[Snapshot], added: Seq[ManifestEntry],
-                    replacedPaths: Set[String], operation: String,
-                    removedRecords: Long): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = if (added.isEmpty) None else {
-      val r = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, r, added); Some(r)
-    }
-    val rmRel = if (replacedPaths.isEmpty) None else {
-      val r = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, r, replacedPaths.toSeq.sorted); Some(r)
-    }
-    val addedRecords = added.map(_.record_count).sum
-    val basisV = basis.map(_.version).getOrElse(0L)
+    val (eqdels, prewritten) = c.shards.partition(_._1 == "eqdel")
+    val delta = eqdels ++ addRel.map("add" -> _) ++ prewritten ++ rmRel.map("remove" -> _)
+    // still exact after a Rewrite rebases: compatible interleaves never
+    // touch the replaced files
+    val removedRecords =
+      if (c.removed.isEmpty) 0L
+      else if (c.removedRecords >= 0L) c.removedRecords
+      else liveRecordsIn(c.rule.basis, c.removed)
+    val basisV = c.rule.basis.map(_.version).getOrElse(0L)
     val deadline = System.currentTimeMillis() + contentionBudgetMs
     var backoffMs = 25L
     while (System.currentTimeMillis() < deadline) {
-      val parent = currentSnapshot
-      val pv = parent.map(_.version).getOrElse(0L)
-      if (pv != basisV) validateRebase(basisV, parent, replacedPaths, operation)
-      var (shards, seq) = parentShards(parent)
-      // the publish-time parent must hold no pending delete the rewrite
-      // would corrupt (see block comment) — checked on the assembled shard
-      // list itself so it covers interleaves AND a freshly-read basis
-      shards.foreach { sh =>
-        if (sh.kind == "eqdel")
-          throw new CommitConflictException(
-            s"$operation on ref $refName at $location: the table has a " +
-            "pending equality-delete shard — rewriting files under it would " +
-            "resurrect deleted rows; materialize deletes (applyDeletes) and " +
-            "re-plan")
-        if (sh.kind == "posdel" && shardTouchesFiles(sh, replacedPaths))
-          throw new CommitConflictException(
-            s"$operation on ref $refName at $location: a pending positional-" +
-            "delete shard addresses a file this rewrite replaces — its " +
-            "deletes would be dropped; materialize deletes (applyDeletes) " +
-            "and re-plan")
+      val parent = c.rule match {
+        case Commit.Exact(b) => b
+        case Commit.Append => currentSnapshot
+        case Commit.Rewrite(_) =>
+          val head = currentSnapshot
+          if (head.map(_.version).getOrElse(0L) != basisV)
+            validateRebase(basisV, head, c.removed, c.operation)
+          head
       }
-      addRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "add", r) }
-      rmRel.foreach { r => seq += 1; shards :+= ManifestShard(seq, "remove", r) }
-      val live = parent.map(_.recordCount).getOrElse(0L) + addedRecords - removedRecords
-      val pf = parent.map(_.fileCount).getOrElse(0L)
-      val files = if (pf < 0) -1L else pf + added.size - replacedPaths.size
+      val pv = parent.map(_.version).getOrElse(0L)
+      val baseShards = c.base match {
+        case Commit.Parent => parent.map(manifestShards).getOrElse(Seq.empty)
+        case Commit.ParentWithoutDeletes => parent.map(manifestShards).getOrElse(Seq.empty)
+          .filterNot(sh => sh.kind == "eqdel" || sh.kind == "posdel")
+        case Commit.Explicit(shards) => shards
+      }
+      if (c.rule.isInstanceOf[Commit.Rewrite])
+        checkPendingDeletes(baseShards, c.removed, c.operation)
+      val top = baseShards.map(_.seq).maxOption.getOrElse(0)
+      val shards = baseShards ++ delta.zipWithIndex.map { case ((kind, path), i) =>
+        ManifestShard(top + 1 + i, kind, path)
+      }
+      val (records, files) = c.counts.getOrElse {
+        val pf = parent.map(_.fileCount).getOrElse(0L)
+        (parent.map(_.recordCount).getOrElse(0L) + c.added.map(_.record_count).sum +
+           c.recordDelta - removedRecords,
+         if (pf < 0) -1L else pf + c.added.size + c.fileDelta - c.removed.size)
+      }
       if (claimEdge(refName, pv))
-        return publishClaimed(parent, shards, operation, live, files, None)
+        return writeSnapshot(parent, shards, c.operation, records, files, c.schema)
+      if (c.rule.isInstanceOf[Commit.Exact])
+        throw new CommitConflictException(
+          s"ref $refName at $location was extended past v$pv by a concurrent " +
+          s"commit — ${c.operation} was planned against a stale snapshot; " +
+          "re-plan against the new head and retry")
       Thread.sleep(backoffMs)
       backoffMs = math.min(backoffMs * 2, 200L)
     }
     throw new CommitConflictException(
-      s"$operation on ref $refName at $location kept losing the edge claim " +
+      s"${c.operation} on ref $refName at $location kept losing the edge claim " +
       "and the head never advanced — a concurrent writer likely died before " +
       "publishing; run repairRefs() and retry")
   }
 
-  /** Walk head → basis and throw [[CommitConflictException]] unless every
-    * interleaved commit is compatible with rewriting `replacedPaths`. */
-  private def validateRebase(basisV: Long, head: Option[Snapshot],
-                             replacedPaths: Set[String], operation: String): Unit = {
-    def conflict(why: String): Nothing = throw new CommitConflictException(
-      s"$operation on ref $refName at $location was planned against v$basisV " +
-      s"but the head moved and cannot be rebased: $why; re-plan against the " +
-      "current head and retry")
-    // collect the interleaved snapshots (head-first) by parent pointers
-    var cur = head
-    val interleaved = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-    while (cur.exists(_.version != basisV)) {
-      val c = cur.get
-      if (c.version < basisV)
-        conflict(s"v${c.version} (${c.operation}) is below the basis — the " +
-          "ref was rolled back or restructured")
-      interleaved += c
-      cur = if (c.parent == 0L) None else snapshot(c.parent).orElse(
-        conflict(s"ancestor v${c.parent} of the new head is unreadable"))
-      if (c.parent == 0L && basisV != 0L)
-        conflict("the new head's ancestry does not reach the basis")
-    }
-    interleaved.foreach { c =>
-      val pShards =
-        if (c.parent == 0L) Seq.empty
-        else manifestShards(snapshot(c.parent).getOrElse(
-          conflict(s"parent v${c.parent} of interleaved v${c.version} is unreadable")))
-      val pMax = pShards.map(_.seq).maxOption.getOrElse(0)
-      val cShards = manifestShards(c)
-      if (cShards.filter(_.seq <= pMax).toSet != pShards.toSet)
-        conflict(s"interleaved ${c.operation} v${c.version} restructured the " +
-          "manifest list (not an incremental delta)")
-      cShards.filter(_.seq > pMax).foreach { sh =>
-        sh.kind match {
-          case "add" | "eqdel" | "posdel" => () // pending deletes are
-            // re-checked on the publish-time parent's own shard list —
-            // commitRewrite conflicts there on any pending eqdel and on
-            // posdel shards touching the replaced files
-          case "remove" =>
-            if (shardTouchesFiles(sh, replacedPaths))
-              conflict(s"interleaved ${c.operation} v${c.version} removed " +
-                "a file this rewrite replaces")
-          case other =>
-            conflict(s"interleaved v${c.version} added an unknown shard kind '$other'")
-        }
+  /** live rows of `paths` at `basis`, for commits whose caller did not know
+    * the count: summed driver-side from the basis's local manifest (zero
+    * Spark jobs), one metadata aggregation only past the localManifest gate. */
+  private def liveRecordsIn(basis: Option[Snapshot], paths: Set[String]): Long =
+    basis.fold(0L) { s =>
+      localManifest(manifestShards(s)) match {
+        case Some(entries) =>
+          entries.iterator.filter(e => paths(e.file_path)).map(_.record_count).sum
+        case None =>
+          val r = manifest(s).filter($"file_path".isin(paths.toSeq: _*))
+            .agg(sum($"record_count")).head()
+          if (r.isNullAt(0)) 0L else r.getLong(0)
       }
     }
-  }
 
-  /** does the shard's `file_path` column intersect `paths`? One tiny
-    * metadata job (shards may be distributed-written and table-sized; the
-    * replaced set is already driver-held by the rewrite planner). */
-  private def shardTouchesFiles(sh: ManifestShard, paths: Set[String]): Boolean = {
-    if (paths.isEmpty) return false
-    import spark.implicits._
-    val shardPaths = spark.read.schema("file_path STRING")
-      .parquet(io.abs(sh.path).toString).select($"file_path")
-    val repl = paths.toSeq.toDF("file_path")
-    !shardPaths.join(broadcast(repl), "file_path").isEmpty
-  }
-
-  /** Commit a merge-on-read delete: the caller has already written the key
-    * shard (distributed) at the seq this method reserved via
-    * [[nextEqDeleteSeq]] against `basis`. Metadata-only — no data file
-    * changes; the live record count drops by the matched-row count, the file
-    * count doesn't. Conflicts when the head moved past `basis`: the stamped
-    * del_seq is only meaningful against that snapshot's shard sequence. */
-  private[lake] def commitEqDelete(shardRel: String, deletedRows: Long,
-                                   basis: Option[Snapshot]): Snapshot = {
-    init()
-    val (prev, seq) = parentShards(basis)
-    val shards = prev :+ ManifestShard(seq + 1, "eqdel", shardRel)
-    val liveCount = basis.map(_.recordCount).getOrElse(0L) - deletedRows
-    publish(basis, shards, "mor-delete", liveCount,
-      basis.map(_.fileCount).getOrElse(0L))
-  }
-
-  /** Commit a merge-on-read POSITIONAL delete: the caller has written the
-    * (file, pos) shard against `basis`. No sequence stamping — positions
-    * bind to immutable physical files — but the matched count and the
-    * "row not already deleted" guarantee were computed against `basis`, so
-    * a moved head still conflicts. */
-  private[lake] def commitPosDelete(shardRel: String, deletedRows: Long,
-                                    basis: Option[Snapshot]): Snapshot = {
-    init()
-    val (prev, seq) = parentShards(basis)
-    val shards = prev :+ ManifestShard(seq + 1, "posdel", shardRel)
-    publish(basis, shards, "mor-posdelete",
-      basis.map(_.recordCount).getOrElse(0L) - deletedRows,
-      basis.map(_.fileCount).getOrElse(0L))
-  }
-
-  /** Commit a merge-on-read ROW CHANGE (MorUpdate): the new rows' add shard
-    * and the old addresses' posdel shard land in ONE snapshot — readers see
-    * the old rows or the new rows, never both, never neither. Counts stay
-    * arithmetic: +appended −changed. Conflicts when the head moved past the
-    * basis (the addresses were planned against its physical layout). */
-  private[lake] def commitMorRowChange(basis: Snapshot, added: Seq[ManifestEntry],
-                                       posShardRels: Seq[String], changedRows: Long,
-                                       operation: String): Snapshot = {
-    val uid = UUID.randomUUID().toString.take(12)
-    var (shards, seq) = parentShards(Some(basis))
-    if (added.nonEmpty) {
-      val addRel = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, addRel, added)
-      seq += 1; shards :+= ManifestShard(seq, "add", addRel)
-    }
-    posShardRels.foreach { r => seq += 1; shards :+= ManifestShard(seq, "posdel", r) }
-    val live = basis.recordCount + added.map(_.record_count).sum - changedRows
-    val files = if (basis.fileCount < 0) -1L else basis.fileCount + added.size
-    publish(Some(basis), shards, operation, live, files)
-  }
-
-  // ---- DML strategy property --------------------------------------------
-
-  /** How SQL row-level DML (UPDATE / MERGE / non-filter DELETE) executes:
-    * "copy-on-write" (default — rewrite matched files now) or
-    * "merge-on-read" (position-delete old addresses + append new rows, one
-    * snapshot, materialize later) — the Iceberg write.update.mode /
-    * write.merge.mode table property re-expressed. */
-  def dmlMode: String =
-    if (io.exists("meta/dml-mode.text")) io.readString("meta/dml-mode.text").trim
-    else "copy-on-write"
-
-  def setDmlMode(mode: String): Unit = {
-    require(mode == "copy-on-write" || mode == "merge-on-read",
-      s"unknown dml mode $mode (copy-on-write | merge-on-read)")
-    init()
-    io.writeAtomic("meta/dml-mode.text", mode)
-  }
-
-  /** commit a delete-shard compaction (MorDelete.compactDeleteShards): the
-    * same live rows behind a bounded shard list — metadata-only, counts
-    * unchanged, conflicts if the head moved past the basis. */
-  private[lake] def commitDeleteCompaction(basis: Snapshot,
-                                           shards: Seq[ManifestShard]): Snapshot =
-    publish(Some(basis), shards, "compact-deletes",
-      basis.recordCount, basis.fileCount)
-
-  /** the seq the NEXT eqdel shard will get when committed against `basis`:
-    * keys must be stamped with their del_seq before the shard is written.
-    * [[commitEqDelete]] conflicts if the head moved past `basis`, so a
-    * stamped seq can never be committed against the wrong shard sequence. */
-  private[lake] def nextEqDeleteSeq(basis: Option[Snapshot]): Long =
-    parentShards(basis)._2.toLong + 1L
-
-  /** Commit a merge-on-read UPSERT: ONE snapshot holding both the batch's
-    * equality-delete keys (del_seq = s, retracting whatever prior version
-    * of those keys is live) and the batch's new data files (add seq = s+1,
-    * so the batch's own rows survive their own retraction — the Iceberg
-    * sequence rule). The CDC "upsert mode" write shape: no MERGE join on
-    * the write path, no file rewritten; a never-seen key retracts nothing.
-    * `eqdelShardRel = None` = the batch matched nothing live — commits as
-    * a plain append, leaving no pending-delete state behind. */
-  private[lake] def commitUpsert(added: Seq[ManifestEntry],
-                                 eqdelShardRel: Option[String],
-                                 retractedRows: Long, basis: Option[Snapshot],
-                                 operation: String): Snapshot = {
-    init()
-    val uid = UUID.randomUUID().toString.take(12)
-    val addRel = s"meta/manifest-add-$uid.parquet"
-    MetaIO.writeEntries(io, addRel, added)
-    val (prev, seq) = parentShards(basis)
-    var shards = prev
-    var s = seq
-    eqdelShardRel.foreach { r => s += 1; shards :+= ManifestShard(s, "eqdel", r) }
-    s += 1
-    shards :+= ManifestShard(s, "add", addRel)
-    val liveCount = basis.map(_.recordCount).getOrElse(0L) - retractedRows +
-      added.map(_.record_count).sum
-    val parentFiles = basis.map(_.fileCount).getOrElse(0L)
-    publish(basis, shards, operation, liveCount,
-      if (parentFiles < 0) -1L else parentFiles + added.size)
-  }
-
-  /** Exactly-once epoch guard shared by the streaming sinks: has `op`
-    * (which embeds the sink/query id and epoch id) already been committed?
-    * A per-sink high-water marker answers the common case in one read; the
-    * crash window (committed, marker not yet advanced) is covered by
-    * walking the snapshot chain only back to the marker's version. No
-    * marker = first epochs or a pre-marker table: one full log scan, then
-    * the marker takes over. */
-  private[lake] def epochReplayed(markerRel: String, op: String,
-                                  epochId: Long): Boolean = {
-    val marker: Option[(Long, Long)] =
-      if (exists && io.exists(markerRel))
-        io.readString(markerRel).trim.split(' ') match {
-          case Array(e, v) => Some((e.toLong, v.toLong))
-          case _ => None
-        }
-      else None
-    def chainHasOp(floor: Long): Boolean = {
-      var v = currentVersion
-      while (v > floor) {
-        snapshot(v) match {
-          case Some(sn) if sn.operation == op => return true
-          case Some(sn) => v = sn.parent
-          case None => return false // expired below here: older than any crash window
-        }
-      }
-      false
-    }
-    marker.exists(_._1 >= epochId) ||
-      (exists && (marker match {
-        case Some((_, mv)) => chainHasOp(mv)
-        case None => listSnapshots().exists(_.operation == op)
-      }))
-  }
-
-  /** Commit the MATERIALIZATION of pending merge-on-read deletes: the
-    * affected files were rewritten with deletes applied, every eqdel shard
-    * is dropped from the manifest list, and the live record count is
-    * UNCHANGED (the MoR commits already subtracted the deleted rows — this
-    * commit only converts logical deletes into physical ones). */
-  private[lake] def commitApplyDeletes(basis: Snapshot, added: Seq[ManifestEntry],
-                                       removedPaths: Set[String]): Snapshot = {
-    val uid = UUID.randomUUID().toString.take(12)
-    var shards = manifestShards(basis)
-      .filterNot(sh => sh.kind == "eqdel" || sh.kind == "posdel")
-    var seq = shards.map(_.seq).maxOption.getOrElse(0)
-    if (added.nonEmpty) {
-      val addRel = s"meta/manifest-add-$uid.parquet"
-      MetaIO.writeEntries(io, addRel, added)
-      seq += 1
-      shards :+= ManifestShard(seq, "add", addRel)
-    }
-    if (removedPaths.nonEmpty) {
-      val rmRel = s"meta/manifest-remove-$uid.parquet"
-      MetaIO.writeRemoves(io, rmRel, removedPaths.toSeq.sorted)
-      seq += 1
-      shards :+= ManifestShard(seq, "remove", rmRel)
-    }
-    val parentFiles = basis.fileCount
-    val fileCount =
-      if (parentFiles < 0) -1L else parentFiles + added.size - removedPaths.size
-    publish(Some(basis), shards, "apply-deletes", basis.recordCount, fileCount)
-  }
-
-  private def parentShards(parent: Option[Snapshot]): (Seq[ManifestShard], Int) = {
-    val prev = parent.map(manifestShards).getOrElse(Seq.empty)
-    (prev, prev.map(_.seq).maxOption.getOrElse(0))
-  }
-
-  private def writeList(newVersion: Long, shards: Seq[ManifestShard]): String = {
+  /** the publish step of [[commit]], run only by the edge-claim winner:
+    * allocate the version, write the list + snapshot, advance this handle's
+    * ref. */
+  private def writeSnapshot(parent: Option[Snapshot], shards: Seq[ManifestShard],
+                            operation: String, liveCount: Long, fileCount: Long,
+                            schemaOverride: Option[(String, String)]): Snapshot = {
+    val newVersion = allocateVersion()
     val listRel = s"meta/manifest-list-v$newVersion.parquet"
     MetaIO.writeShards(io, listRel, shards)
-    listRel
-  }
-
-  /** Publish a fully assembled commit against a known parent: win the edge
-    * claim (throwing [[CommitConflictException]] on a lost race), then
-    * allocate the version, write the list + snapshot, advance this handle's
-    * ref. Rewrite-style ops call this directly — a lost race means their
-    * planned file set is stale and must be re-planned, never rebased. */
-  private def publish(parent: Option[Snapshot], shards: Seq[ManifestShard],
-                      operation: String, liveCount: Long, fileCount: Long,
-                      schemaOverride: Option[(String, String)] = None): Snapshot = {
-    val pv = parent.map(_.version).getOrElse(0L)
-    if (!claimEdge(refName, pv))
-      throw new CommitConflictException(
-        s"ref $refName at $location was extended past v$pv by a concurrent " +
-        s"commit — $operation was planned against a stale snapshot; " +
-        "re-plan against the new head and retry")
-    publishClaimed(parent, shards, operation, liveCount, fileCount, schemaOverride)
-  }
-
-  /** Adds-only commits (append, streaming epochs, WAP publish) REBASE AND
-    * RETRY: `build` re-derives the full shard list and counts from whatever
-    * the current head is, so losing an edge race just means re-assembling on
-    * the winner — appends commute. Bounded wait: if the head never moves
-    * (the winning claimant died pre-publish), this surfaces as a conflict
-    * naming repairRefs() instead of spinning forever. */
-  private def commitRetrying(operation: String)
-      (build: Option[Snapshot] => (Seq[ManifestShard], Long, Long)): Snapshot = {
-    val deadline = System.currentTimeMillis() + contentionBudgetMs
-    var backoffMs = 25L
-    while (System.currentTimeMillis() < deadline) {
-      val parent = currentSnapshot
-      val (shards, live, files) = build(parent)
-      if (claimEdge(refName, parent.map(_.version).getOrElse(0L)))
-        return publishClaimed(parent, shards, operation, live, files, None)
-      Thread.sleep(backoffMs)
-      backoffMs = math.min(backoffMs * 2, 200L)
-    }
-    throw new CommitConflictException(
-      s"$operation on ref $refName at $location kept losing the edge claim " +
-      "and the head never advanced — a concurrent writer likely died before " +
-      "publishing; run repairRefs() and retry")
-  }
-
-  private def publishClaimed(parent: Option[Snapshot], shards: Seq[ManifestShard],
-                             operation: String, liveCount: Long, fileCount: Long,
-                             schemaOverride: Option[(String, String)]): Snapshot = {
-    val newVersion = allocateVersion()
-    val listRel = writeList(newVersion, shards)
     // schema evolution state is INHERITED by every ordinary commit; only
     // evolveSchema/dropColumn commits override it
     val (extra, dropped) = schemaOverride.getOrElse(
@@ -1594,16 +1252,185 @@ class GraftTable(val spark: SparkSession, val location: String,
     snap
   }
 
-  /** record sum of specific removed paths — a small agg over the parent's
-    * live manifest, used only when the caller didn't know the count. */
-  private def removedRecordSum(parent: Option[Snapshot], paths: Set[String]): Long =
-    parent match {
-      case None => 0L
-      case Some(s) =>
-        val r = manifest(s).filter($"file_path".isin(paths.toSeq: _*))
-          .agg(sum($"record_count")).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0)
+  // ---- validated rebase for rewrite commits (Iceberg RewriteFiles) -------
+  //
+  // A REWRITE (compaction / clustering) replaces `replacedPaths` with
+  // `added` holding the SAME logical rows — it is content-neutral, so unlike
+  // MERGE/UPDATE (whose matched-vs-insert split depends on target content)
+  // it does not have to conflict with every interleaved commit. At 100 TB a
+  // compaction runs for minutes-to-hours while ingest lands continuously;
+  // "re-plan the whole rewrite on any interleaved append" means maintenance
+  // can never commit on a live table. Instead, a lost edge race walks the
+  // snapshot chain from the planning basis to the new head and REBASES when
+  // every interleaved commit is compatible:
+  //
+  //   - "add" shards (appends, other rewrites' outputs)   → compatible
+  //   - "remove" shards DISJOINT from replacedPaths        → compatible
+  //     (two rewrites of disjoint file sets commute)
+  //   - "remove" shards touching a replaced file           → CONFLICT
+  //     (someone else already replaced rows this plan still carries)
+  //   - a restructured manifest list (rewrite-manifests, apply-deletes,
+  //     rollback, full bucket rewrite)                     → CONFLICT
+  //
+  // Independently of the walk, the PUBLISH-TIME parent must hold no pending
+  // delete shard the rewrite would corrupt — whether it arrived as an
+  // interleave or was already in a freshly-read basis (batched maintenance
+  // re-reads its basis per batch):
+  //
+  //   - any pending "eqdel" shard                          → CONFLICT
+  //     (the rebased add shard's seq would exceed the delete's seq, so the
+  //      rewrite's re-written copies of deleted rows would escape the
+  //      sequence rule and resurrect)
+  //   - a pending "posdel" shard touching a replaced file  → CONFLICT
+  //     (its addresses bind to a file this rewrite drops — those deletes
+  //      would silently vanish); DISJOINT posdel shards stay pending, valid
+  //
+  // Validation happens against the head observed at the top of each attempt;
+  // the edge claim then proves the head did not move between validation and
+  // publish (heads only move by claiming edges), so a rebase can never
+  // silently skip an unvalidated commit.
+
+  /** the publish-time check of a Rewrite commit (see block comment): the
+    * parent's shard list must hold no pending delete the rewrite of
+    * `replaced` would corrupt — checked on the assembled list itself so it
+    * covers interleaves AND a freshly-read basis. */
+  private def checkPendingDeletes(shards: Seq[ManifestShard], replaced: Set[String],
+                                  operation: String): Unit =
+    shards.foreach { sh =>
+      if (sh.kind == "eqdel")
+        throw new CommitConflictException(
+          s"$operation on ref $refName at $location: the table has a " +
+          "pending equality-delete shard — rewriting files under it would " +
+          "resurrect deleted rows; materialize deletes (applyDeletes) and " +
+          "re-plan")
+      if (sh.kind == "posdel" && shardTouchesFiles(sh, replaced))
+        throw new CommitConflictException(
+          s"$operation on ref $refName at $location: a pending positional-" +
+          "delete shard addresses a file this rewrite replaces — its " +
+          "deletes would be dropped; materialize deletes (applyDeletes) " +
+          "and re-plan")
     }
+
+  /** Walk head → basis and throw [[CommitConflictException]] unless every
+    * interleaved commit is compatible with rewriting `replacedPaths`. */
+  private def validateRebase(basisV: Long, head: Option[Snapshot],
+                             replacedPaths: Set[String], operation: String): Unit = {
+    def conflict(why: String): Nothing = throw new CommitConflictException(
+      s"$operation on ref $refName at $location was planned against v$basisV " +
+      s"but the head moved and cannot be rebased: $why; re-plan against the " +
+      "current head and retry")
+    // collect the interleaved snapshots (head-first) by parent pointers
+    var cur = head
+    val interleaved = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
+    while (cur.exists(_.version != basisV)) {
+      val c = cur.get
+      if (c.version < basisV)
+        conflict(s"v${c.version} (${c.operation}) is below the basis — the " +
+          "ref was rolled back or restructured")
+      interleaved += c
+      cur = if (c.parent == 0L) None else snapshot(c.parent).orElse(
+        conflict(s"ancestor v${c.parent} of the new head is unreadable"))
+      if (c.parent == 0L && basisV != 0L)
+        conflict("the new head's ancestry does not reach the basis")
+    }
+    interleaved.foreach { c =>
+      val pShards =
+        if (c.parent == 0L) Seq.empty
+        else manifestShards(snapshot(c.parent).getOrElse(
+          conflict(s"parent v${c.parent} of interleaved v${c.version} is unreadable")))
+      val pMax = pShards.map(_.seq).maxOption.getOrElse(0)
+      val cShards = manifestShards(c)
+      if (cShards.filter(_.seq <= pMax).toSet != pShards.toSet)
+        conflict(s"interleaved ${c.operation} v${c.version} restructured the " +
+          "manifest list (not an incremental delta)")
+      cShards.filter(_.seq > pMax).foreach { sh =>
+        sh.kind match {
+          case "add" | "eqdel" | "posdel" => () // pending deletes are
+            // re-checked on the publish-time parent's own shard list —
+            // checkPendingDeletes conflicts there on any pending eqdel and
+            // on posdel shards touching the replaced files
+          case "remove" =>
+            if (shardTouchesFiles(sh, replacedPaths))
+              conflict(s"interleaved ${c.operation} v${c.version} removed " +
+                "a file this rewrite replaces")
+          case other =>
+            conflict(s"interleaved v${c.version} added an unknown shard kind '$other'")
+        }
+      }
+    }
+  }
+
+  /** does the shard's `file_path` column intersect `paths`? One tiny
+    * metadata job (shards may be distributed-written and table-sized; the
+    * replaced set is already driver-held by the rewrite planner). */
+  private def shardTouchesFiles(sh: ManifestShard, paths: Set[String]): Boolean = {
+    if (paths.isEmpty) return false
+    import spark.implicits._
+    val shardPaths = spark.read.schema("file_path STRING")
+      .parquet(io.abs(sh.path).toString).select($"file_path")
+    val repl = paths.toSeq.toDF("file_path")
+    !shardPaths.join(broadcast(repl), "file_path").isEmpty
+  }
+
+  // ---- DML strategy property --------------------------------------------
+
+  /** How SQL row-level DML (UPDATE / MERGE / non-filter DELETE) executes:
+    * "copy-on-write" (default — rewrite matched files now) or
+    * "merge-on-read" (position-delete old addresses + append new rows, one
+    * snapshot, materialize later) — the Iceberg write.update.mode /
+    * write.merge.mode table property re-expressed. */
+  def dmlMode: String =
+    if (io.exists("meta/dml-mode.text")) io.readString("meta/dml-mode.text").trim
+    else "copy-on-write"
+
+  def setDmlMode(mode: String): Unit = {
+    require(mode == "copy-on-write" || mode == "merge-on-read",
+      s"unknown dml mode $mode (copy-on-write | merge-on-read)")
+    init()
+    io.writeAtomic("meta/dml-mode.text", mode)
+  }
+
+  /** the seq the NEXT eqdel shard will get when committed against `basis`:
+    * keys must be stamped with their del_seq before the shard is written.
+    * [[commit]] sequences a commit's eqdel shard right after its base list,
+    * and an Exact commit conflicts if the head moved past `basis`, so a
+    * stamped seq can never be committed against the wrong shard sequence. */
+  private[lake] def nextEqDeleteSeq(basis: Option[Snapshot]): Long =
+    basis.map(manifestShards).getOrElse(Seq.empty).map(_.seq).maxOption.getOrElse(0) + 1L
+
+  /** Exactly-once epoch guard shared by the streaming sinks: has `op`
+    * (which embeds the sink/query id and epoch id) already been committed?
+    * A per-sink high-water marker answers the common case in one read; the
+    * crash window (committed, marker not yet advanced) is covered by
+    * walking the snapshot chain only back to the marker's version. No
+    * marker = first epochs or a pre-marker table: one full log scan, then
+    * the marker takes over. */
+  private[lake] def epochReplayed(markerRel: String, op: String,
+                                  epochId: Long): Boolean = {
+    val marker: Option[(Long, Long)] =
+      if (exists && io.exists(markerRel))
+        io.readString(markerRel).trim.split(' ') match {
+          case Array(e, v) => Some((e.toLong, v.toLong))
+          case _ => None
+        }
+      else None
+    def chainHasOp(floor: Long): Boolean = {
+      var v = currentVersion
+      while (v > floor) {
+        snapshot(v) match {
+          case Some(sn) if sn.operation == op => return true
+          case Some(sn) => v = sn.parent
+          case None => return false // expired below here: older than any crash window
+        }
+      }
+      false
+    }
+    marker.exists(_._1 >= epochId) ||
+      (exists && (marker match {
+        case Some((_, mv)) => chainHasOp(mv)
+        case None => listSnapshots().exists(_.operation == op)
+      }))
+  }
 
   // ---- storage bucketing (the layout behind storage-partitioned joins) --
 
@@ -1661,7 +1488,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     // every new file stays bucket-pure (one extra shuffle per append — the
     // price every bucketed table format pays to preserve shuffle-free joins)
     val added = writeDataFilesRouted(df, "append")
-    commit(added, Set.empty, "append")
+    commit(Commit("append", Commit.Append, added = added))
   }
 
   /** Manifest entries snapshot `s` itself ADDED: its shard set minus its
@@ -1923,7 +1750,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     // publish a fresh snapshot under a reused id — exactly what claims
     // exist to prevent). Reaping v <= max(hwm, main) is safe because both
     // are monotone: the hint only advances via edge claims, and the hwm
-    // write is read-max (publishClaimed).
+    // write is read-max (writeSnapshot).
     val claimFloor = {
       val hwm = if (io.exists("meta/max-version.text"))
         io.readString("meta/max-version.text").trim.toLong else 0L
@@ -1956,8 +1783,9 @@ class GraftTable(val spark: SparkSession, val location: String,
       throw new IllegalArgumentException(s"no snapshot v$toVersion at $location"))
     val parent = currentSnapshot
     require(parent.exists(_.version != toVersion), s"v$toVersion is already current")
-    publish(parent, manifestShards(target),
-      s"rollback-to-v$toVersion", target.recordCount, target.fileCount)
+    commit(Commit(s"rollback-to-v$toVersion", Commit.Exact(parent),
+      base = Commit.Explicit(manifestShards(target)),
+      counts = Some((target.recordCount, target.fileCount))))
   }
 
   /** CHERRY-PICK: re-apply snapshot `v`'s APPEND delta onto the current
@@ -2024,11 +1852,9 @@ class GraftTable(val spark: SparkSession, val location: String,
         s"$overlap of v$v's files are already live at head — the delta is " +
         "already present (cherry-picking an ancestor would double-count rows)")
     }
-    var (shards, seq) = parentShards(head)
-    delta.foreach { d => seq += 1; shards :+= ManifestShard(seq, "add", d.path) }
-    publish(head, shards, s"cherrypick-v$v",
-      head.map(_.recordCount).getOrElse(0L) + addedRecords,
-      head.map(_.fileCount).filter(_ >= 0).map(_ + addedFiles).getOrElse(-1L))
+    commit(Commit(s"cherrypick-v$v", Commit.Exact(head),
+      shards = delta.map(d => "add" -> d.path),
+      recordDelta = addedRecords, fileDelta = addedFiles))
   }
 
   /** Remove ORPHAN data files: files under data/ that no retained snapshot's
@@ -2108,14 +1934,10 @@ class GraftTable(val spark: SparkSession, val location: String,
   def publishStaged(id: String): Snapshot = {
     val meta = parseJsonFlat(io.readString(s"meta/staged-$id.json"))
     // adds-only: rebases onto whatever head wins a concurrent race
-    val snap = commitRetrying(s"publish-wap-$id") { parent =>
-      val (prev, seq) = parentShards(parent)
-      val shards = prev :+ ManifestShard(seq + 1, "add", s"meta/staged-add-$id.parquet")
-      val rc = parent.map(_.recordCount).getOrElse(0L) + meta("recordCount").trim.toLong
-      val parentFiles = parent.map(_.fileCount).getOrElse(0L)
-      val fc = if (parentFiles < 0) -1L else parentFiles + meta("fileCount").trim.toLong
-      (shards, rc, fc)
-    }
+    val snap = commit(Commit(s"publish-wap-$id", Commit.Append,
+      shards = Seq("add" -> s"meta/staged-add-$id.parquet"),
+      recordDelta = meta("recordCount").trim.toLong,
+      fileDelta = meta("fileCount").trim.toLong))
     io.delete(s"meta/staged-$id.json")
     snap
   }
@@ -2143,7 +1965,7 @@ class GraftTable(val spark: SparkSession, val location: String,
     * entry (an S3 bill at scale). */
   def rewriteManifests(targetEntriesPerShard: Int = 250000): Snapshot =
     currentSnapshot match {
-      case None => commitDelta(Seq.empty, None, "manifest_rewrite")
+      case None => commit(Commit("manifest_rewrite", Commit.Append))
       case Some(s) =>
         // the rebase collapses every add shard to seq 1, which would destroy
         // the per-file sequence numbers the MoR delete rule compares against
@@ -2166,10 +1988,9 @@ class GraftTable(val spark: SparkSession, val location: String,
             val live = entries.filter(e => existingSet(e.file_path))
             if (live.size <= targetEntriesPerShard) {
               val sorted = live.sortBy(e => (e.partition, e.min_z, e.file_path))
-              val addRel = s"meta/manifest-add-${UUID.randomUUID().toString.take(12)}.parquet"
-              MetaIO.writeEntries(io, addRel, sorted)
-              return publish(Some(s), Seq(ManifestShard(1, "add", addRel)),
-                "manifest_rewrite", sorted.map(_.record_count).sum, sorted.size.toLong)
+              return commit(Commit("manifest_rewrite", Commit.Exact(Some(s)),
+                added = sorted, base = Commit.Explicit(Seq.empty),
+                counts = Some((sorted.map(_.record_count).sum, sorted.size.toLong))))
             }
           case _ => ()
         }
@@ -2200,37 +2021,9 @@ class GraftTable(val spark: SparkSession, val location: String,
           .parquet(io.abs(addRel).toString)
           .agg(sum($"record_count"), count(lit(1))).head()
         val liveCount = if (r.isNullAt(0)) 0L else r.getLong(0)
-        publish(Some(s), Seq(ManifestShard(1, "add", addRel)), "manifest_rewrite",
-          liveCount, r.getLong(1))
-    }
-
-  /** Register externally Spark-written add shards as a new snapshot — a
-    * metadata-only commit for manifest imports and scale harnesses, where
-    * the entry set is written DISTRIBUTED and must never pass through the
-    * driver as objects. */
-  private[graft] def commitSparkShards(addRels: Seq[String], operation: String,
-                                       recordCount: Long, fileCount: Long): Snapshot = {
-    init()
-    val parent = currentSnapshot
-    val shards = addRels.zipWithIndex.map { case (r, i) => ManifestShard(i + 1, "add", r) }
-    publish(parent, shards, operation, recordCount, fileCount)
-  }
-
-  /** Full rewrite commit (compaction/cluster jobs): adds replace the entire
-    * previous live set; the removed paths are streamed from the previous
-    * manifest DataFrame, never collected, and the removed record count is
-    * the parent's total — no re-aggregation. */
-  def commitFull(entries: Seq[ManifestEntry], operation: String): Snapshot =
-    currentSnapshot match {
-      case None => commitDelta(entries, None, operation)
-      case Some(s) => localManifest(manifestShards(s)) match {
-        case Some(prev) => // metadata-small: driver-side remove set, zero jobs
-          commit(entries, prev.map(_.file_path).toSet, operation,
-            removedRecords = s.recordCount, basis = Some(s))
-        case None => commitDelta(entries, Some(manifest(s).select("file_path")),
-          operation, removedRecords = s.recordCount, removedFiles = s.fileCount,
-          basis = Some(s))
-      }
+        commit(Commit("manifest_rewrite", Commit.Exact(Some(s)),
+          shards = Seq("add" -> addRel), base = Commit.Explicit(Seq.empty),
+          counts = Some((liveCount, r.getLong(1)))))
     }
 
   // tiny flat-json parser for our own snapshot files

@@ -132,8 +132,18 @@ final class LakeIO(val root: String) extends Serializable {
     }
   }
 
+  /** the filesystem small replaceable metadata (version hint, branch
+    * heads, markers) is read and renamed on: a checksummed filesystem (the
+    * local default) renames a file and its .crc sidecar in two steps, so a
+    * reader racing writeAtomic could see the new bytes under the old
+    * checksum, or no file at all after a failed sidecar rename. */
+  @transient private lazy val plainFs: FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   def readString(rel: String): String = {
-    val in = fs.open(abs(rel))
+    val in = plainFs.open(abs(rel))
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
@@ -176,11 +186,12 @@ final class LakeIO(val root: String) extends Serializable {
     * class targets). Stores whose rename refuses to overwrite need a commit
     * service for true atomicity regardless — documented above. */
   def writeAtomic(rel: String, s: String): Unit = {
-    val tmp = rel + ".tmp-" + java.util.UUID.randomUUID()
-    writeString(tmp, s)
-    if (!fs.rename(abs(tmp), abs(rel))) {
-      fs.delete(abs(rel), false)
-      if (!fs.rename(abs(tmp), abs(rel)))
+    val tmp = abs(rel + ".tmp-" + java.util.UUID.randomUUID())
+    val out = plainFs.create(tmp, true)
+    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!plainFs.rename(tmp, abs(rel))) {
+      plainFs.delete(abs(rel), false)
+      if (!plainFs.rename(tmp, abs(rel)))
         throw new java.io.IOException(s"atomic rename failed for $rel")
     }
   }

@@ -65,7 +65,8 @@ object Maintenance {
     // the rewrite rebases over compatible commits, conflicts only when a
     // concurrent commit touched one of the replaced files (GraftTable
     // "validated rebase" section)
-    table.commitRewrite(snapOpt, added, smallPaths.toSet, "compact", removedRecords)
+    table.commit(Commit("compact", Commit.Rewrite(snapOpt), added = added,
+      removed = smallPaths.toSet, removedRecords = removedRecords))
     Lineage.record(table, jobId, phase, smallPaths, added)
     CompactionResult(smallPaths.size, added.size, added.map(_.record_count).sum)
   }
@@ -84,12 +85,18 @@ object Maintenance {
     require(!table.hasPendingDeletes,
       "bucketize with pending merge-on-read deletes would re-sequence files " +
       "past their deletes — run MorDelete.applyDeletes(table) first")
+    val spark = table.spark
+    import spark.implicits._
     val snapOpt = table.currentSnapshot
     if (snapOpt.isEmpty) { table.writeBucketSpec(column, n, sorted = true); return 0L }
+    val snap = snapOpt.get
+    // planning collect: path strings only (a full rewrite touches every file)
+    val paths = table.manifest(snap).select("file_path").as[String].collect().toSet
     val routed = Bucketing.route(table.scan(), column, n, sorted = true)
     val added = table.writeDataFiles(routed, s"bucket$n", Some((column, n)))
     table.writeBucketSpec(column, n, sorted = true)
-    table.commitFull(added, "cluster_bucket")
+    table.commit(Commit("cluster_bucket", Commit.Exact(Some(snap)), added = added,
+      removed = paths, removedRecords = snap.recordCount))
     added.map(_.record_count).sum
   }
 
@@ -141,8 +148,8 @@ object Maintenance {
     // the rewrite replaces the whole live set: removed records = parent
     // total. Validated rebase: rows appended while the clustering ran stay
     // live (and simply unclustered) instead of aborting the whole rewrite.
-    table.commitRewrite(Some(snap), added, paths.toSet, phase,
-      removedRecords = snap.recordCount)
+    table.commit(Commit(phase, Commit.Rewrite(Some(snap)), added = added,
+      removed = paths.toSet, removedRecords = snap.recordCount))
     Lineage.record(table, jobId, phase, paths, added)
     added.map(_.record_count).sum
   }
@@ -202,8 +209,8 @@ object Maintenance {
         }
         // basis re-read per batch: our own prior batches never enter the
         // rebase walk; only commits racing THIS batch's write window do
-        table.commitRewrite(table.currentSnapshot, added, paths.toSet,
-          "compact", recs)
+        table.commit(Commit("compact", Commit.Rewrite(table.currentSnapshot),
+          added = added, removed = paths.toSet, removedRecords = recs))
         results += CompactionResult(paths.size, added.size, added.map(_.record_count).sum)
         b += 1
       }
@@ -251,9 +258,9 @@ object Maintenance {
       val clustered = salted.repartitionByRange(n, col("z"), col("_salt"))
         .sortWithinPartitions("z").drop("_salt")
       val added = table.writeDataFiles(clustered, s"cluster-b$b")
-      table.commitRewrite(table.currentSnapshot, added, paths.toSet,
-        if (useHilbert) "cluster_hilbert" else "cluster_zorder",
-        removedRecords = recs)
+      table.commit(Commit(if (useHilbert) "cluster_hilbert" else "cluster_zorder",
+        Commit.Rewrite(table.currentSnapshot), added = added,
+        removed = paths.toSet, removedRecords = recs))
       rows += added.map(_.record_count).sum
       b += 1
     }
@@ -290,7 +297,7 @@ object Maintenance {
 
     if (table.currentSnapshot.isEmpty) {
       val added = table.writeDataFilesRouted(source0.select(dataCols.map(col): _*), "merge-insert")
-      table.commit(added, Set.empty, "merge")
+      table.commit(Commit("merge", Commit.Append, added = added))
       Lineage.record(table, jobId, phase, Seq.empty, added)
       return MergeResult(0, added.map(_.record_count).sum, 0)
     }
@@ -344,7 +351,9 @@ object Maintenance {
     val added = table.writeDataFilesRouted(mergedRows, "merge")
     val insertedCount = obs.get("n").asInstanceOf[Long]
 
-    table.commit(added, affectedRel, "merge", basis = basisSnap)
+    // the removed files' row count is derived from the basis manifest
+    table.commit(Commit("merge", Commit.Exact(basisSnap), added = added,
+      removed = affectedRel))
     matched.unpersist()
     src.unpersist()
     Lineage.record(table, jobId, phase, affectedRel.toSeq, added)

@@ -284,6 +284,15 @@ object MetaIO {
     }
   }
 
+  /** drop every cached shard whose absolute path starts with `prefix`. */
+  private[lake] def invalidate(prefix: String): Unit = {
+    purge(entryCache, prefix)
+    purge(shardCache, prefix)
+  }
+
+  private[lake] def purge(cache: java.util.Map[String, _], prefix: String): Unit =
+    cache.synchronized { cache.keySet().removeIf(_.startsWith(prefix)); () }
+
   def readLineage(io: LakeIO, rel: String): Seq[Lineage.LineageRow] =
     readGroups(io, rel).map { g =>
       Lineage.LineageRow(g.getString("job_id", 0), g.getString("phase", 0),

@@ -60,8 +60,8 @@ object MorDelete {
     deleteMatching(table, table.scan().filter(coalesce(condition, lit(false))))
 
   private def deleteMatching(table: GraftTable, matching: DataFrame): Long = {
-    // the basis snapshot fixes the del_seq; commitEqDelete conflicts if the
-    // head moves before the commit lands (the stamped seq would be wrong
+    // the basis snapshot fixes the del_seq; the Exact commit conflicts if
+    // the head moves before it lands (the stamped seq would be wrong
     // against a different shard sequence)
     val basis = table.currentSnapshot
     val delSeq = table.nextEqDeleteSeq(basis)
@@ -75,7 +75,8 @@ object MorDelete {
     // driver-side, zero jobs
     val matched = MetaIO.rowCount(table.io, shardRel)
     if (matched == 0L) { table.io.delete(shardRel); return 0L }
-    table.commitEqDelete(shardRel, matched, basis)
+    table.commit(Commit("mor-delete", Commit.Exact(basis),
+      shards = Seq("eqdel" -> shardRel), recordDelta = -matched))
     matched
   }
 
@@ -120,7 +121,10 @@ object MorDelete {
     keys.write.mode("overwrite").parquet(abs)
     val matched = MetaIO.rowCount(table.io, shardRel)
     if (matched == 0L) { table.io.delete(shardRel); return 0L }
-    table.commitPosDelete(shardRel, matched, Some(basis))
+    // the matched count and "not already deleted" were computed against
+    // the basis, so a moved head conflicts
+    table.commit(Commit("mor-posdelete", Commit.Exact(Some(basis)),
+      shards = Seq("posdel" -> shardRel), recordDelta = -matched))
     matched
   }
 
@@ -164,7 +168,13 @@ object MorDelete {
     val added =
       if (affected.isEmpty) Seq.empty[ManifestEntry]
       else table.writeDataFilesRouted(table.morScan(snap, affected), "apply-deletes")
-    table.commitApplyDeletes(snap, added, affected.map(_._1).toSet)
+    // every delete shard is dropped; the live count is UNCHANGED — the
+    // rewritten files hold exactly the removed files' live rows (the MoR
+    // commits already subtracted the deleted ones)
+    table.commit(Commit("apply-deletes", Commit.Exact(Some(snap)), added = added,
+      removed = affected.map(_._1).toSet,
+      removedRecords = added.map(_.record_count).sum,
+      base = Commit.ParentWithoutDeletes))
     ApplyResult(affected.size, untouched, eqShards.size + posShards.size)
   }
 
@@ -187,16 +197,16 @@ object MorDelete {
     if (eq.size <= 1 && pos.size <= 1) return (0, 0)
     val uid = java.util.UUID.randomUUID().toString.take(12)
     val spark = table.spark
-    var shards = table.manifestShards(snap)
+    val kept = table.manifestShards(snap)
       .filterNot(sh => (eq.size > 1 && sh.kind == "eqdel") ||
                        (pos.size > 1 && sh.kind == "posdel"))
-    var seq = shards.map(_.seq).maxOption.getOrElse(0)
+    val merged = Seq.newBuilder[(String, String)]
     if (eq.size > 1) {
       val rel = s"meta/manifest-eqdel-$uid.parquet"
       spark.read.schema(GraftTable.eqDeleteSchema)
         .parquet(eq.map(sh => table.io.abs(sh.path).toString): _*)
         .coalesce(1).write.mode("overwrite").parquet(table.io.abs(rel).toString)
-      seq += 1; shards :+= ManifestShard(seq, "eqdel", rel)
+      merged += "eqdel" -> rel
     }
     if (pos.size > 1) {
       val rel = s"meta/manifest-posdel-$uid.parquet"
@@ -204,9 +214,11 @@ object MorDelete {
         .parquet(pos.map(sh => table.io.abs(sh.path).toString): _*)
         .distinct() // stacked deletes never duplicate addresses, but cheap insurance
         .coalesce(1).write.mode("overwrite").parquet(table.io.abs(rel).toString)
-      seq += 1; shards :+= ManifestShard(seq, "posdel", rel)
+      merged += "posdel" -> rel
     }
-    table.commitDeleteCompaction(snap, shards)
+    // the same live rows behind a bounded shard list: counts unchanged
+    table.commit(Commit("compact-deletes", Commit.Exact(Some(snap)),
+      shards = merged.result(), base = Commit.Explicit(kept)))
     (if (eq.size > 1) eq.size else 0, if (pos.size > 1) pos.size else 0)
   }
 }

@@ -91,7 +91,8 @@ object MorUpdate {
         return MorUpdateResult(0, 0)
       }
       val posRel = writeAddresses(table, matching)
-      table.commitMorRowChange(basis, added, posRel.toSeq, updatedRows, "mor-update")
+      table.commit(Commit("mor-update", Commit.Exact(Some(basis)), added = added,
+        shards = posRel.toSeq.map("posdel" -> _), recordDelta = -updatedRows))
       MorUpdateResult(updatedRows, added.size)
     } finally matching.unpersist()
   }
@@ -112,7 +113,7 @@ object MorUpdate {
     val snapOpt = table.currentSnapshot
     if (snapOpt.isEmpty) {
       val added = table.writeDataFilesRouted(source0, "mor-merge")
-      table.commit(added, Set.empty, "append")
+      table.commit(Commit("append", Commit.Append, added = added))
       return MorMergeResult(0, added.map(_.record_count).sum, added.size)
     }
     val snap = snapOpt.get
@@ -138,7 +139,8 @@ object MorUpdate {
         val updatedRows = matched.count()
         val insertedRows = added.map(_.record_count).sum - updates.count()
         if (added.isEmpty && posRel.isEmpty) return MorMergeResult(0, 0, 0)
-        table.commitMorRowChange(snap, added, posRel.toSeq, updatedRows, "mor-merge")
+        table.commit(Commit("mor-merge", Commit.Exact(Some(snap)), added = added,
+          shards = posRel.toSeq.map("posdel" -> _), recordDelta = -updatedRows))
         MorMergeResult(updatedRows, insertedRows, added.size)
       } finally matched.unpersist()
     } finally src.unpersist()
@@ -194,7 +196,10 @@ object MorUpdate {
       val added = table.writeDataFilesRouted(batch, "upsert")
       if (added.isEmpty && shardRel.isEmpty)
         return UpsertResult(0L, 0L, basis.map(_.version).getOrElse(0L))
-      val snap = table.commitUpsert(added, shardRel, retracted, basis, operation)
+      // one snapshot: the eqdel shard sequences before the batch's add
+      // shard, so the batch's own rows survive their own retraction
+      val snap = table.commit(Commit(operation, Commit.Exact(basis), added = added,
+        shards = shardRel.toSeq.map("eqdel" -> _), recordDelta = -retracted))
       UpsertResult(added.map(_.record_count).sum, retracted, snap.version)
     } finally liveMatches.foreach(_.unpersist())
   }

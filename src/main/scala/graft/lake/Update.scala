@@ -69,8 +69,8 @@ object Update {
       }
     }
     val added = table.writeDataFilesRouted(src.select(projected.toIndexedSeq: _*), "update-cow")
-    table.commit(added, cand.map(_._1).toSet, "update", cand.map(_._2).sum,
-      basis = Some(snap))
+    table.commit(Commit("update", Commit.Exact(Some(snap)), added = added,
+      removed = cand.map(_._1).toSet, removedRecords = cand.map(_._2).sum))
     UpdateResult(cand.length, total - cand.length, updatedRows)
   }
 }

@@ -76,8 +76,9 @@ class ConcurrencySpec extends SparkTestBase {
     val added = t.writeDataFiles(t.readFiles(
       t.manifestEntries(stale.get).map(_.file_path)), "compact")
     intercept[CommitConflictException] {
-      t.commit(added, t.manifestEntries(stale.get).map(_.file_path).toSet,
-        "compact", removedRecords = 200L, basis = stale)
+      t.commit(Commit("compact", Commit.Exact(stale), added = added,
+        removed = t.manifestEntries(stale.get).map(_.file_path).toSet,
+        removedRecords = 200L))
     }
     // the table is untouched by the failed commit
     assert(t.currentSnapshot.get.recordCount == 230L)
@@ -96,7 +97,8 @@ class ConcurrencySpec extends SparkTestBase {
     keys.write.parquet(t.io.abs(shardRel).toString)
     t.append(synthDf(10, seed = 12)) // head moves past the basis
     intercept[CommitConflictException] {
-      t.commitEqDelete(shardRel, 5L, basis)
+      t.commit(Commit("mor-delete", Commit.Exact(basis),
+        shards = Seq("eqdel" -> shardRel), recordDelta = -5L))
     }
     assert(t.currentSnapshot.get.recordCount == 110L)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.lake.{BloomIndex, Delete, GraftTable, Maintenance, MorDelete}
+import graft.lake.{BloomIndex, Commit, Delete, GraftTable, Maintenance, MorDelete}
 import graft.synth.SourceFiles
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -90,7 +90,7 @@ class LakeReviewFixesSpec extends SparkTestBase {
     t.append(rows(Seq(("r", "p1", "c1", "xml", "<a/>"))))
     // the streaming sink's per-epoch op string
     val entries = t.writeDataFiles(rows(Seq(("r", "p2", "c2", "xml", "<b/>"))), "stream")
-    t.commit(entries, Set.empty, "stream-append query=q1 epoch=0")
+    t.commit(Commit("stream-append query=q1 epoch=0", Commit.Append, added = entries))
     // a metadata-only schema commit changes zero rows
     t.evolveSchema("stars INT")
     t.append(rows(Seq(("r", "p3", "c3", "xml", "<c/>"))).withColumn("stars", lit(5)))
@@ -193,5 +193,40 @@ class LakeReviewFixesSpec extends SparkTestBase {
     Maintenance.cluster(t, "jobZ")
     assert(t.bucketSpec.isEmpty,
       "cluster left bucket-spec.json behind while writing unbucketed files")
+  }
+
+  test("DROP TABLE purges cached metadata: a recreated table is never served the old shards") {
+    val wh = Files.createTempDirectory("graft-drop-cache").toString
+    spark.conf.set("spark.sql.catalog.dropcat", "graft.lake.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.dropcat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS dropcat.ns")
+    val loc = s"$wh/ns/t"
+    val meta = Seq("meta/snapshot-v1.json", "meta/manifest-list-v1.parquet")
+    def lengths(dir: String) = meta.map(rel => new java.io.File(s"$dir/$rel").length())
+    def build(dir: String, path: String): GraftTable = {
+      val t = new GraftTable(spark, dir)
+      t.append(rows(Seq(("r", path, "c1", "xml", "<a/>"))).repartition(1))
+      t
+    }
+    def paths(t: GraftTable) = t.scan().select("path").collect().map(_.getString(0)).toSeq
+
+    assert(paths(build(loc, "old")) == Seq("old")) // caches hold the old metadata
+    val oldLengths = lengths(loc)
+    val oldMtimes = meta.map(rel => new java.io.File(s"$loc/$rel").lastModified())
+    spark.sql("DROP TABLE dropcat.ns.t")
+
+    // the recreated table's metadata files get the old ones' lengths and
+    // mtimes, so only the drop-time purge tells the two tables apart. The
+    // shard list is snappy-compressed and names random shards, so its length
+    // varies: build candidates elsewhere until one matches, then move it in
+    // (metadata paths are table-relative)
+    val twin = Iterator.continually(Files.createTempDirectory("graft-drop-twin").toString)
+      .take(20).find { d => build(d, "new"); lengths(d) == oldLengths }
+      .getOrElse(fail("no recreated table matched the old metadata lengths"))
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(twin), new java.io.File(loc))
+    meta.zip(oldMtimes).foreach { case (rel, mtime) =>
+      assert(new java.io.File(s"$loc/$rel").setLastModified(mtime))
+    }
+    assert(paths(new GraftTable(spark, loc)) == Seq("new"))
   }
 }

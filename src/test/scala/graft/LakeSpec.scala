@@ -1,6 +1,6 @@
 package graft
 
-import graft.lake.{GraftTable, Maintenance, Lineage}
+import graft.lake.{Commit, GraftTable, Maintenance, Lineage}
 import graft.synth.SourceFiles
 import graft.expr.XmqFunctions
 import org.apache.spark.sql.functions._
@@ -343,7 +343,7 @@ class LakeSpec extends SparkTestBase {
       ManifestEntry(s"data/fake/f$i.parquet", "fake", 1000L, 1L << 30,
         "r", "r", "p", "p", Seq("scala"), 0L, 0L, 0L, 0L, i.toLong)
     }
-    t.commit(fakes, Set.empty, "fake-append")
+    t.commit(Commit("fake-append", Commit.Append, added = fakes))
     assert(t.currentSnapshot.get.recordCount == realRecords + 10000L * 1000L)
 
     val c = Maintenance.compact(t, "bigjob", smallBytes = 1L << 20, targetBytes = 1L << 30)
@@ -405,7 +405,7 @@ class LakeSpec extends SparkTestBase {
       ManifestEntry(s"data/fake/f$i.parquet", "fake", 10L, 1L << 20,
         "zzz", "zzz", "p", "p", Seq("scala"), 0L, 0L, 0L, 0L, i.toLong)
     }
-    t.commit(fakes, Set.empty, "fake-append")
+    t.commit(Commit("fake-append", Commit.Append, added = fakes))
 
     val repo = SourceFiles.repoName(1)
     val df = spark.read.format("graft").load(t.location).filter($"repo" === repo)
@@ -724,7 +724,7 @@ class LakeSpec extends SparkTestBase {
     t.init()
     val e = ManifestEntry("data/n/f0.parquet", "n", 5L, 100L,
       null, null, null, null, null, 0L, 0L, 0L, 0L, 7L)
-    t.commit(Seq(e), Set.empty, "append") // NPE'd before the appendOpt fix
+    t.commit(Commit("append", Commit.Append, added = Seq(e))) // NPE'd before the appendOpt fix
     val back = t.manifestEntries(t.currentSnapshot.get)
     assert(back.size == 1 && back.head.min_repo == null && back.head.record_count == 5L)
     // and the null-stat file is KEPT by any stats predicate (coalesce-true)

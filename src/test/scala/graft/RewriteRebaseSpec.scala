@@ -6,7 +6,7 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.functions._
 
-/** Validated rebase for rewrite commits (GraftTable.commitRewrite — the
+/** Validated rebase for rewrite commits (Commit.Rewrite — the
   * Iceberg RewriteFiles stance): a compaction/clustering planned against
   * snapshot S commits at S+k when every interleaved commit is compatible
   * (adds, removes/posdels disjoint from the replaced files), and conflicts
@@ -23,6 +23,13 @@ class RewriteRebaseSpec extends SparkTestBase {
   private def planRewrite(t: GraftTable, paths: Seq[String]) =
     t.writeDataFiles(t.readFiles(paths), "compact")
 
+  /** commit a compaction of `replaced` into `added` planned at `basis`. */
+  private def commitRewrite(t: GraftTable, basis: Option[Snapshot],
+                            added: Seq[ManifestEntry], replaced: Set[String],
+                            removedRecords: Long): Snapshot =
+    t.commit(Commit("compact", Commit.Rewrite(basis), added = added,
+      removed = replaced, removedRecords = removedRecords))
+
   test("rewrite rebases over an interleaved append instead of conflicting") {
     val t = fresh()
     t.append(synthDf(200, seed = 7).repartition(4))
@@ -30,7 +37,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     val paths = t.manifestEntries(basis.get).map(_.file_path)
     val added = planRewrite(t, paths)
     t.append(synthDf(30, seed = 8)) // interleaved ingest while the rewrite ran
-    val snap = t.commitRewrite(basis, added, paths.toSet, "compact", 200L)
+    val snap = commitRewrite(t, basis, added, paths.toSet, 200L)
     assert(snap.operation == "compact")
     assert(snap.parent > basis.get.version) // rebased onto the append's head
     assert(t.currentSnapshot.get.recordCount == 230L)
@@ -55,9 +62,9 @@ class RewriteRebaseSpec extends SparkTestBase {
     // interleave 1: an append; interleave 2: a DISJOINT rewrite of B's files
     t.append(synthDf(25, seed = 13))
     val addedB = planRewrite(t, bPaths)
-    t.commitRewrite(t.currentSnapshot, addedB, bPaths.toSet, "compact", 60L)
+    commitRewrite(t, t.currentSnapshot, addedB, bPaths.toSet, 60L)
     // the A rewrite walks both interleaves and rebases
-    val snap = t.commitRewrite(basis, addedA, aPaths.toSet, "compact", 120L)
+    val snap = commitRewrite(t, basis, addedA, aPaths.toSet, 120L)
     assert(snap.operation == "compact")
     assert(t.scan().count() == 205L)
     assert(t.currentSnapshot.get.recordCount == 205L)
@@ -71,9 +78,9 @@ class RewriteRebaseSpec extends SparkTestBase {
     val mine = planRewrite(t, paths)
     // a concurrent rewrite of the SAME files wins first
     val theirs = planRewrite(t, paths)
-    t.commitRewrite(basis, theirs, paths.toSet, "compact", 100L)
+    commitRewrite(t, basis, theirs, paths.toSet, 100L)
     val e = intercept[CommitConflictException] {
-      t.commitRewrite(basis, mine, paths.toSet, "compact", 100L)
+      commitRewrite(t, basis, mine, paths.toSet, 100L)
     }
     assert(e.getMessage.contains("removed a file this rewrite replaces"))
     assert(t.scan().count() == 100L) // table intact
@@ -90,7 +97,7 @@ class RewriteRebaseSpec extends SparkTestBase {
       $"repo" === k.getString(0) && $"path" === k.getString(1) &&
         $"commit" === k.getString(2)) >= 1L)
     val e = intercept[CommitConflictException] {
-      t.commitRewrite(basis, added, paths.toSet, "compact", 80L)
+      commitRewrite(t, basis, added, paths.toSet, 80L)
     }
     assert(e.getMessage.contains("pending equality-delete"))
   }
@@ -108,7 +115,7 @@ class RewriteRebaseSpec extends SparkTestBase {
       $"repo" === bKey.getString(0) && $"path" === bKey.getString(1) &&
         $"commit" === bKey.getString(2))
     assert(deleted == 1L)
-    val snap = t.commitRewrite(basis, added, aPaths.toSet, "compact", 100L)
+    val snap = commitRewrite(t, basis, added, aPaths.toSet, 100L)
     assert(snap.operation == "compact")
     assert(t.scan().count() == 149L) // the posdel still applies post-rebase
     assert(t.currentSnapshot.get.recordCount == 149L)
@@ -125,7 +132,7 @@ class RewriteRebaseSpec extends SparkTestBase {
       $"repo" === k.getString(0) && $"path" === k.getString(1) &&
         $"commit" === k.getString(2)) >= 1L)
     val e = intercept[CommitConflictException] {
-      t.commitRewrite(basis, added, paths.toSet, "compact", 60L)
+      commitRewrite(t, basis, added, paths.toSet, 60L)
     }
     assert(e.getMessage.contains("positional-delete shard addresses a file"))
   }
@@ -139,7 +146,7 @@ class RewriteRebaseSpec extends SparkTestBase {
     val added = planRewrite(t, paths)
     t.rewriteManifests() // rebases the shard list onto one shard
     val e = intercept[CommitConflictException] {
-      t.commitRewrite(basis, added, paths.toSet, "compact", 80L)
+      commitRewrite(t, basis, added, paths.toSet, 80L)
     }
     assert(e.getMessage.contains("restructured the manifest list"))
   }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.lake.{Bucketing, GraftTable, Maintenance}
+import graft.lake.{Bucketing, Commit, GraftTable, Maintenance}
 
 /** Storage-partitioned joins: bucket-clustered tables whose joins on the
   * bucket column need no shuffle on either side. */
@@ -90,7 +90,7 @@ class SpjSpec extends SparkTestBase {
     // path (simulating a pre-bucketing file) must stay visible
     val extra = rows(50, "c9")
     val added = t.writeDataFiles(extra, "legacy") // no bucket stats
-    t.commit(added, Set.empty, "append")
+    t.commit(Commit("append", Commit.Append, added = added))
     val df3 = s.read.format("graft").load(t.location).filter($"repo" === "repo_5")
     val exp3 = expected + extra.filter($"repo" === "repo_5").count()
     assert(df3.count() === exp3, "rows in unbucketed files must survive bucket pruning")

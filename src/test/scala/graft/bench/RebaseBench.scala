@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Quantifies what validated rebase saves when maintenance races ingest.
   *
-  * Before commitRewrite, a compaction planned against snapshot S threw on
-  * ANY interleaved commit — the caller's only recourse was a full re-plan:
+  * Before rewrite commits rebased (Commit.Rewrite), a compaction planned
+  * against snapshot S threw on ANY interleaved commit — the caller's only recourse was a full re-plan:
   * read the small files again, rewrite them again, try again (and lose
   * again if ingest keeps coming). With validated rebase the lost race costs
   * one chain walk over the interleaved snapshots' shard lists (driver-side
@@ -62,8 +62,8 @@ object RebaseBench {
 
     // the rebased commit: chain walk over `interleaves` snapshots + claim
     val (snap, rebaseSecs) = timed {
-      t.commitRewrite(basis, added, paths.toSet, "compact",
-        removedRecords = basis.get.recordCount)
+      t.commit(graft.lake.Commit("compact", graft.lake.Commit.Rewrite(basis),
+        added = added, removed = paths.toSet, removedRecords = basis.get.recordCount))
     }
     require(snap.parent - basis.get.version == interleaves.toLong,
       s"expected a rebase across $interleaves commits")

@@ -5,8 +5,7 @@ import java.nio.charset.StandardCharsets
 
 /** Replays tests/backforth_*.test — THE round-trip corpus named by the north
   * star: INPUT →(ARGS_FIRST,CMDS_FIRST)→ FIRST →(ARGS_SECOND,CMDS_SECOND)→ SECOND. */
-class BackforthFixtureSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class BackforthFixtureSpec extends CorpusSuite {
 
   /** render-* output is colorized presentation — outside engine scope. */
   private val excluded = Set("backforth_002_render_html.test")

@@ -5,8 +5,7 @@ import java.nio.charset.StandardCharsets
 
 /** Replays the remaining CLI fixture families: cmd_*, select_*, noinput_*,
   * statistics_*, pipe_* (runners tests/test_cmds.sh etc.). */
-class CliFixtureSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class CliFixtureSpec extends CorpusSuite {
 
   private def grep(content: String, n: String) =
     content.split("\n").filter(_.startsWith(n)).map(_.drop(n.length + 1)).mkString("")

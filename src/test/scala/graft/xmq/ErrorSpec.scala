@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Error-path behavior (tests/error_*.test inputs): malformed documents must
   * yield a clean failure (Result.ok=false / null from the expression), never
   * an uncaught task-killing exception (SURVEY.md §3.2). */
-class ErrorSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class ErrorSpec extends CorpusSuite {
 
   for (p <- Fixtures.list("""error_\d+.*\.test""")) {
     val name = p.getFileName.toString

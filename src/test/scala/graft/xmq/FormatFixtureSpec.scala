@@ -6,8 +6,7 @@ import java.nio.charset.StandardCharsets
 /** Replays the reference formatting corpus (tests/format_*.test):
   * input (detected type) through CMDS (default to-xmq) must equal XMQ section;
   * same with --compact must equal COMPACT section (unless IGNORE). */
-class FormatFixtureSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class FormatFixtureSpec extends CorpusSuite {
 
   private def grepDirective(content: String, name: String): String =
     content.split("\n").filter(_.contains(name)).map(_.drop(name.length + 1)).mkString("")

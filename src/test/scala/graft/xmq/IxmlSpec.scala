@@ -8,8 +8,7 @@ import graft.xmq.ixml.Ixml
   * must produce <name>.output.xmq byte-for-byte (the same check as
   * tests/test_ixml_correct.sh), plus the ixml_not_* fixtures (the !
   * negative-lookahead extension and the failure document format). */
-class IxmlSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class IxmlSpec extends CorpusSuite {
 
   private val correctDir = Paths.get("/root/reference/tests/ixml/correct")
 
@@ -84,6 +83,7 @@ class IxmlSpec extends AnyFunSuite {
   }
 
   test("ixml:name grammar library resolution (--ixml=ixml:data/csv)") {
+    needsCorpus()
     val r = Cli.run("1,2\n".getBytes("UTF-8"), "--ixml=ixml:data/csv",
       "to-xmq --compact", base = "/root/reference")
     assert(r.ok, s"${r.error}")

@@ -5,8 +5,7 @@ import java.nio.charset.StandardCharsets
 
 /** Replays tests/parse_json_*.test: INPUT json → to-xmq equals XMQ section,
   * and → to-json equals JSON section. */
-class ParseJsonFixtureSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class ParseJsonFixtureSpec extends CorpusSuite {
 
   for (p <- Fixtures.list("""parse_json_\d+.*\.test""")) {
     val name = p.getFileName.toString
@@ -34,8 +33,7 @@ class ParseJsonFixtureSpec extends AnyFunSuite {
 
 /** Replays tests/json_*.test: INPUT (xmq) → to-json equals OUTPUT, and
   * --compact variant equals COMPACT (unless IGNORE). */
-class JsonFixtureSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class JsonFixtureSpec extends CorpusSuite {
 
   for (p <- Fixtures.list("""json_\d+.*\.test""")) {
     val name = p.getFileName.toString

@@ -11,13 +11,13 @@ import graft.xmq.ixml.Ixml
   *  - the samples pipeline: csv --ixml--> table --xslq--> html --xpath-->
   *    count(//td) and /html/body/table/tr[last()]/td[last()].
   */
-class LibrarySpec extends AnyFunSuite {
-  private val lib = Paths.get("/root/reference/library")
-  assume(Files.isDirectory(lib), "reference library not present")
+class LibrarySpec extends CorpusSuite(Fixtures.dir.resolveSibling("library")) {
+  private def lib = corpus
 
   private def read(p: Path): String = Files.readString(p)
 
   test("library self test: ixml.ixml parses itself to ixml.xml's tree") {
+    needsCorpus()
     val grammar = read(lib.resolve("core/ixml.ixml"))
     val got = XmqEngine.toXmq(Ixml.parseToDoc(grammar, grammar))
     val expected = XmqEngine.toXmq(
@@ -26,7 +26,7 @@ class LibrarySpec extends AnyFunSuite {
   }
 
   for {
-    dataDir <- Seq(lib.resolve("data"))
+    dataDir <- Seq(lib.resolve("data")) if Files.isDirectory(dataDir)
     grammarFile <- {
       import scala.jdk.CollectionConverters._
       Files.list(dataDir).iterator().asScala.toSeq.sortBy(_.toString)
@@ -48,6 +48,7 @@ class LibrarySpec extends AnyFunSuite {
   }
 
   test("samples pipeline: csv -> ixml -> xslt -> html -> xpath") {
+    needsCorpus()
     val csv = read(Paths.get("/root/reference/tests/samples/plumbing_products.csv"))
     val table = Ixml.parseToDoc(read(lib.resolve("data/csv.ixml")), csv)
     val html = Xslt.transform(table,

@@ -9,8 +9,7 @@ import java.nio.file.Files
   * fixtures (tests/test_xsd.sh: $PROG $ARGS input validate sheet.xsd $CMDS,
   * stdout sed-normalized to "validated against ...").
   */
-class XsltXsdSpec extends AnyFunSuite {
-  assume(Fixtures.available, "reference corpus not present")
+class XsltXsdSpec extends CorpusSuite {
 
   private def grep(content: String, n: String) =
     content.split("\n").filter(_.startsWith(n)).map(_.drop(n.length + 1)).mkString("")
